@@ -6,6 +6,7 @@ import org.apache.spark.sql.{Column, DataFrame, Encoders, GraftSql, Row, SparkSe
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.Timing.timed
 import graft.codec.Hashing
 import graft.expr.GraftDecodeAny
 import graft.functions.{graft_codec, graft_range_bucket}
@@ -371,30 +372,51 @@ object GenericTable {
 
   // ------------------------------------------------------------- encode
 
+  /** Storage frame of `df` under the leaf plan `leaves`: normalized
+    * leaves + range key + full-row value hash (over the storage leaves, in
+    * plan order — the resume identity).
+    */
+  private def keyedOf(df: DataFrame, leaves: Seq[Leaf], key: String, keyType: DataType): DataFrame =
+    df.select(leaves.map(l => l.enc.as(l.name)) :+ keyExprOf(key, keyType).as("_graft_key"): _*)
+      .withColumn("_graft_rh", rowHash(leaves))
+
+  /** Row count and value-complete fingerprint of a storage frame: every
+    * leaf value of every row is pinned (xor + multiplicity-sensitive
+    * wrapping sum of the row hashes + count + schema + key). One job.
+    */
+  private def fingerprintOf(
+      keyed: DataFrame, tag: String, key: String, schema: StructType): (Long, String) = {
+    val st = timed("g-fingerprint")(keyed.agg(
+      count(lit(1)).as("rows"),
+      expr("bit_xor(_graft_rh)").as("x"),
+      expr("sum(cast(_graft_rh as decimal(38,0)))").as("s")).head())
+    val rows = st.getLong(0)
+    val xor = if (st.isNullAt(1)) 0L else st.getLong(1)
+    val sumMod =
+      if (st.isNullAt(2)) java.math.BigInteger.ZERO else GraftTable.mod64(st.getDecimal(2))
+    (rows, Hashing.sha256Hex(
+      s"$tag;rows=$rows;xor=$xor;sum=$sumMod;key=$key;schema=${schema.json}"))
+  }
+
+  /** Block ids of a storage frame under range `bounds` (one broadcast). */
+  private def withBlockIds(keyed: DataFrame, bounds: Array[Long]): DataFrame =
+    keyed.withColumn("block_id", graft_range_bucket(col("_graft_key"),
+      keyed.sparkSession.sparkContext.broadcast(bounds)))
+
+  /** The generic lane's snapshot metadata: read schema, key, leaf plan and
+    * (for versions written after an append or rewrite) the write schema.
+    */
+  private def genericMeta(rows: Long, readSchema: StructType, writeSchema: Option[StructType],
+      key: String, leaves: Seq[Leaf]): Map[String, String] =
+    Map("rows" -> rows.toString, SchemaKey -> readSchema.json, KeyKey -> key,
+      "generic_leaves" -> leaves.map(l => s"${l.kind}:${l.name}").mkString("\u001f")) ++
+      writeSchema.map(WriteSchemaKey -> _.json)
+
   /** Encode any supported DataFrame as an encoded table at `tableDir`.
     * `keyCol` picks the range-partition key (default: `doc_id` when
     * present, else the first column). Idempotent: an unchanged input
     * resumes as a no-op; a changed input commits a fresh version.
     */
-  /** `stream_*` metadata carried forward so interleaved commits never drop
-    * the streaming sink's exactly-once watermark (same contract as the
-    * token lane's carriedMeta).
-    */
-  private def carriedMeta(parent: Option[Snapshot]): Map[String, String] =
-    parent.map(_.stats.filter(_._1.startsWith("stream_")).toMap)
-      .getOrElse(Map.empty)
-
-  private val timing = sys.env.get("GRAFT_TIMING").contains("1")
-  private def timed[T](label: String)(f: => T): T = {
-    if (!timing) f
-    else {
-      val t0 = System.nanoTime()
-      val r = f
-      println(f"GRAFT_TIMING g-$label ${(System.nanoTime() - t0) / 1e9}%.2fs")
-      r
-    }
-  }
-
   def encode(
       df: DataFrame,
       tableDir: String,
@@ -403,61 +425,29 @@ object GenericTable {
       extraMeta: Map[String, String] = Map.empty): EncodeResult = {
     val spark = df.sparkSession
     val schema = df.schema
-    val plan = planOf(schema)
-    val leaves = plan.flatMap(_._2)
+    val leaves = planOf(schema).flatMap(_._2)
     val key =
       if (keyCol.nonEmpty) keyCol
       else if (schema.fieldNames.contains("doc_id")) "doc_id"
       else schema.fieldNames.head
     require(schema.fieldNames.contains(key), s"key column $key not in schema")
 
-    // storage frame: normalized leaves + range key + full-row value hash
-    // (over the storage leaves, in plan order — the resume identity)
-    val keyed = df
-      .select(leaves.map(l => l.enc.as(l.name)) :+
-        keyExprOf(key, schema(key).dataType).as("_graft_key"): _*)
-      .withColumn("_graft_rh", rowHash(leaves))
-
-    val st = timed("fingerprint")(keyed.agg(
-      count(lit(1)).as("rows"),
-      expr("bit_xor(_graft_rh)").as("x"),
-      expr("sum(cast(_graft_rh as decimal(38,0)))").as("s")).head())
-    val rows = st.getLong(0)
-    val xor = if (st.isNullAt(1)) 0L else st.getLong(1)
-    val sumMod =
-      if (st.isNullAt(2)) java.math.BigInteger.ZERO else GraftTable.mod64(st.getDecimal(2))
-    // value-complete fingerprint: every leaf value of every row is pinned
-    // (xor + multiplicity-sensitive wrapping sum + count + schema + key)
-    val fingerprint = Hashing.sha256Hex(
-      s"generic;rows=$rows;xor=$xor;sum=$sumMod;key=$key;schema=${schema.json}")
-
+    val keyed = keyedOf(df, leaves, key, schema(key).dataType)
+    val (rows, fingerprint) = fingerprintOf(keyed, "generic", key, schema)
     val cur = GraftTable.currentSnapshot(spark, tableDir)
     val parent = cur.filter(_.inputFingerprint == fingerprint)
     parent.filter(p => p.complete && opts.blockFilter.isEmpty).foreach { p =>
-      return EncodeResult(p.version, p.snapshotId, p.numBlocks, 0L,
-        p.blocksEncoded, p.rowCount, p.tokenCount, p.bytesTotal, p.plainBytes,
-        p.contentSig, complete = true)
+      return EncodeResult.unchanged(p)
     }
     val ver = cur.map(_.version).getOrElse(0) + 1
-    val statsFields = (Map(
-      "rows" -> rows.toString, SchemaKey -> schema.json, KeyKey -> key,
-      "generic_leaves" -> leaves.map(l => s"${l.kind}:${l.name}").mkString("\u001f")) ++
-      carriedMeta(cur) ++ extraMeta).toSeq
+    val meta = (genericMeta(rows, schema, None, key, leaves) ++
+      GraftTable.carriedMeta(cur) ++ extraMeta).toSeq
 
-    if (rows == 0L) {
-      val snapshotId = Hashing.sha256Hex(s"v$ver;generic;fp=$fingerprint;empty")
-      val snap = Snapshot(ver, snapshotId, cur.map(_.snapshotId), fingerprint,
-        s"generic:$key", None, numBlocks = 0, blocksEncoded = 0L,
-        complete = true, rowCount = 0L, tokenCount = 0L, bytesTotal = 0L,
-        plainBytes = 0L, contentSig = "0" * 16, dataDirs = Nil,
-        manifestDirs = Nil, stats = statsFields.sorted,
-        committedAt = java.time.Instant.now().toString)
-      GraftTable.writeString(
-        spark, s"$tableDir/metadata/v$ver.json", GraftTable.renderSnapshot(snap))
-      GraftTable.commitPointer(spark, tableDir, ver)
-      return EncodeResult(ver, snapshotId, 0, 0L, 0L, 0L, 0L, 0L, 0L,
-        snap.contentSig, complete = true)
-    }
+    if (rows == 0L)
+      return Commit(spark, tableDir, ver, None, None, lane = "g-", newBlocks = 0L) { _ =>
+        Commit.Head(Hashing.sha256Hex(s"v$ver;generic;fp=$fingerprint;empty"),
+          cur.map(_.snapshotId), fingerprint, s"generic:$key", None, 0, complete = true, meta)
+      }
 
     // sample-budget-bounded inputs: cache the keyed frame across the
     // bounds sample scan and the encode exchange (see GraftTable.encode)
@@ -467,7 +457,7 @@ object GenericTable {
     val (bounds, boundsDir): (Array[Long], Option[String]) = parent match {
       case Some(p) => (GraftTable.loadBounds(spark, tableDir, p), p.boundsDir)
       case None =>
-        val b = timed("bounds")(GraftTable.computeBounds(
+        val b = timed("g-bounds")(GraftTable.computeBounds(
           keyed, rows, opts.targetRowsPerBlock, opts.sampleRows))
         if (b.isEmpty) (b, None)
         else {
@@ -477,9 +467,7 @@ object GenericTable {
         }
     }
     val numBlocks = bounds.length + 1
-    val bcBounds = spark.sparkContext.broadcast(bounds)
-    val withBlocks = keyed.withColumn(
-      "block_id", graft_range_bucket(col("_graft_key"), bcBounds))
+    val withBlocks = withBlockIds(keyed, bounds)
 
     val notDone = parent match {
       case Some(p) =>
@@ -495,57 +483,23 @@ object GenericTable {
       case None => notDone
     }
 
-    val dataDir = timed("encode+write")(
-      writeBlocksVersion(todo, tableDir, ver, leaves, numBlocks, rows))
-    // persisted: count + JSON write share one pass over the written blocks
-    // (the manifest aggregate reads every payload byte for block_sig)
-    val manifest = manifestOf(spark, s"$tableDir/$dataDir", leaves.length)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-    val newBlocks = timed("manifest-count")(manifest.count())
-    if (newBlocks == 0 && parent.nonEmpty) {
-      GraftTable.delete(spark, s"$tableDir/$dataDir")
-      val p = parent.get
-      return EncodeResult(p.version, p.snapshotId, p.numBlocks, 0L,
-        p.blocksEncoded, p.rowCount, p.tokenCount, p.bytesTotal, p.plainBytes,
-        p.contentSig, p.complete)
+    writeBlocksVersion(todo, tableDir, ver, leaves, numBlocks, rows)
+    Commit.withManifest(tableDir, ver, manifestOf(spark, _, leaves.length)) { fresh =>
+      val newBlocks = timed("g-manifest-count")(fresh.count())
+      if (newBlocks == 0 && parent.nonEmpty) {
+        GraftTable.delete(spark, s"$tableDir/${Commit.dataDir(ver)}")
+        EncodeResult.unchanged(parent.get)
+      } else Commit(spark, tableDir, ver, Some(fresh), parent, lane = "g-",
+          newBlocks = newBlocks) { t =>
+        val snapshotId = Hashing.sha256Hex(
+          s"v$ver;generic;parent=${parent.map(_.snapshotId).getOrElse("none")};" +
+            s"fp=$fingerprint;bounds=${GraftTable.boundsSig(bounds)};" +
+            s"blocks=${t.blocks}/$numBlocks;rows=${t.rows};" +
+            s"bytes=${t.bytes};sig=${t.contentSig}")
+        Commit.Head(snapshotId, cur.map(_.snapshotId), fingerprint, s"generic:$key",
+          boundsDir, numBlocks, complete = t.blocks == numBlocks, meta)
+      }
     }
-    val manifestDir = s"manifests/v$ver"
-    timed("manifest-write")(
-      manifest.write.mode("overwrite").json(s"$tableDir/$manifestDir"))
-
-    val manifestDirs = parent.map(_.manifestDirs).getOrElse(Nil) :+ manifestDir
-    val dataDirs = parent.map(_.dataDirs).getOrElse(Nil) :+ dataDir
-    // the new version's totals come from the still-persisted manifest
-    // frame; only pre-existing manifest dirs are read back from JSON
-    val all = GraftTable.manifestTotalsWithFresh(
-      spark, tableDir, parent.map(_.manifestDirs).getOrElse(Nil), manifest)
-    val tot = timed("totals")(all.agg(
-      count(lit(1)).as("blocks"),
-      sum("row_count").as("rows"),
-      sum("bytes_total").as("bytes"),
-      sum("plain_bytes").as("plain"),
-      expr("bit_xor(block_sig)").as("sig")).head())
-
-    val blocksDone = tot.getLong(0)
-    val contentSig = f"${tot.getLong(4)}%016x"
-    val complete = blocksDone == numBlocks
-    val snapshotId = Hashing.sha256Hex(
-      s"v$ver;generic;parent=${parent.map(_.snapshotId).getOrElse("none")};" +
-        s"fp=$fingerprint;bounds=${GraftTable.boundsSig(bounds)};" +
-        s"blocks=$blocksDone/$numBlocks;rows=${tot.getLong(1)};" +
-        s"bytes=${tot.getLong(2)};sig=$contentSig")
-    val snap = Snapshot(ver, snapshotId, cur.map(_.snapshotId), fingerprint,
-      s"generic:$key", boundsDir, numBlocks, blocksDone, complete,
-      tot.getLong(1), tokenCount = 0L, tot.getLong(2), tot.getLong(3),
-      contentSig, dataDirs, manifestDirs, statsFields.sorted,
-      java.time.Instant.now().toString)
-    GraftTable.writeString(
-      spark, s"$tableDir/metadata/v$ver.json", GraftTable.renderSnapshot(snap))
-    GraftTable.commitPointer(spark, tableDir, ver)
-    EncodeResult(ver, snapshotId, numBlocks, newBlocks, blocksDone,
-      tot.getLong(1), 0L, tot.getLong(2), tot.getLong(3), contentSig, complete)
-    } finally { manifest.unpersist(false); () }
     } finally if (keyedCached) { keyed.unpersist(false); () }
   }
 
@@ -564,39 +518,20 @@ object GenericTable {
       extraMeta: Map[String, String] = Map.empty): EncodeResult = {
     val spark = batch.sparkSession
     val cur = GraftTable.currentSnapshot(spark, tableDir)
-    if (cur.isEmpty) return encode(batch, tableDir, opts = opts)
+    if (cur.isEmpty) return encode(batch, tableDir, opts = opts, extraMeta = extraMeta)
     val parent = cur.get
-    val stats = parent.stats.toMap
-    require(stats.contains(SchemaKey),
-      s"$tableDir is a token table — use GraftTable.append")
-    val parentSchema = readSchemaOf(parent)
-    val merged = mergeSchemas(parentSchema, batch.schema)
-    val key = stats(KeyKey)
+    require(isGeneric(parent), s"$tableDir is a token table — use GraftTable.append")
+    val merged = mergeSchemas(readSchemaOf(parent), batch.schema)
+    val key = keyNameOf(parent)
     require(batch.schema.fieldNames.contains(key),
       s"append batch must carry the table key column $key")
 
     val schema = batch.schema
-    val plan = planOf(schema)
-    val leaves = plan.flatMap(_._2)
-    val keyed = batch
-      .select(leaves.map(l => l.enc.as(l.name)) :+
-        keyExprOf(key, schema(key).dataType).as("_graft_key"): _*)
-      .withColumn("_graft_rh", rowHash(leaves))
-    val st = keyed.agg(
-      count(lit(1)).as("rows"),
-      expr("bit_xor(_graft_rh)").as("x"),
-      expr("sum(cast(_graft_rh as decimal(38,0)))").as("s")).head()
-    val rows = st.getLong(0)
-    if (rows == 0L)
-      return EncodeResult(parent.version, parent.snapshotId, parent.numBlocks,
-        0L, parent.blocksEncoded, parent.rowCount, parent.tokenCount,
-        parent.bytesTotal, parent.plainBytes, parent.contentSig, parent.complete)
-    val xor = if (st.isNullAt(1)) 0L else st.getLong(1)
-    val sumMod =
-      if (st.isNullAt(2)) java.math.BigInteger.ZERO else GraftTable.mod64(st.getDecimal(2))
-    val fingerprint = Hashing.sha256Hex(
-      s"generic-append;parent=${parent.snapshotId};rows=$rows;xor=$xor;" +
-        s"sum=$sumMod;key=$key;schema=${schema.json}")
+    val leaves = planOf(schema).flatMap(_._2)
+    val keyed = keyedOf(batch, leaves, key, schema(key).dataType)
+    val (rows, fingerprint) =
+      fingerprintOf(keyed, s"generic-append;parent=${parent.snapshotId}", key, schema)
+    if (rows == 0L) return EncodeResult.unchanged(parent)
 
     val ver = parent.version + 1
     val bounds = GraftTable.computeBounds(
@@ -609,55 +544,28 @@ object GenericTable {
         Some(dir)
       }
     val newNumBlocks = bounds.length + 1
-    val bcBounds = spark.sparkContext.broadcast(bounds)
-    val withBlocks = keyed.withColumn(
-      "block_id", graft_range_bucket(col("_graft_key"), bcBounds))
+    writeBlocksVersion(withBlockIds(keyed, bounds), tableDir, ver, leaves, newNumBlocks, rows)
+    Commit.withManifest(tableDir, ver, manifestOf(spark, _, leaves.length)) { fresh =>
+      Commit(spark, tableDir, ver, Some(fresh), cur, lane = "g-",
+          newBlocks = newNumBlocks) { t =>
+        val numBlocks = parent.numBlocks + newNumBlocks
+        val snapshotId = Hashing.sha256Hex(
+          s"v$ver;generic-append;parent=${parent.snapshotId};fp=$fingerprint;" +
+            s"bounds=${GraftTable.boundsSig(bounds)};blocks=${t.blocks}/$numBlocks;" +
+            s"rows=${t.rows};bytes=${t.bytes};sig=${t.contentSig}")
+        Commit.Head(snapshotId, Some(parent.snapshotId), fingerprint, s"generic:$key",
+          boundsDir, numBlocks, parent.complete,
+          (genericMeta(t.rows, merged, Some(schema), key, leaves) ++
+            GraftTable.carriedMeta(cur) ++ extraMeta).toSeq)
+      }
+    }
+  }
 
-    val dataDir = writeBlocksVersion(withBlocks, tableDir, ver, leaves, newNumBlocks, rows)
-    val manifestDir = s"manifests/v$ver"
-    // persisted across the JSON write and the totals aggregate: one pass
-    // over the written blocks, and totals never re-read this version
-    val manifest = manifestOf(spark, s"$tableDir/$dataDir", leaves.length)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val manifestDirs = parent.manifestDirs :+ manifestDir
-    val dataDirs = parent.dataDirs :+ dataDir
-    // cross-version totals: manifests of evolved versions differ in their
-    // codec_i columns, but the accounting columns are common to all
-    val tot = try {
-      manifest.write.mode("overwrite").json(s"$tableDir/$manifestDir")
-      GraftTable.manifestTotalsWithFresh(spark, tableDir, parent.manifestDirs, manifest)
-        .agg(
-          count(lit(1)).as("blocks"),
-          sum("row_count").as("rows"),
-          sum("bytes_total").as("bytes"),
-          sum("plain_bytes").as("plain"),
-          expr("bit_xor(block_sig)").as("sig")).head()
-    } finally { manifest.unpersist(false); () }
-    val blocksDone = tot.getLong(0)
-    val contentSig = f"${tot.getLong(4)}%016x"
-    val numBlocks = parent.numBlocks + newNumBlocks
-    val statsFields = (Map(
-      "rows" -> tot.getLong(1).toString,
-      SchemaKey -> merged.json,
-      WriteSchemaKey -> schema.json,
-      KeyKey -> key,
-      "generic_leaves" -> leaves.map(l => s"${l.kind}:${l.name}").mkString("\u001f")) ++
-      carriedMeta(cur) ++ extraMeta).toSeq
-    val snapshotId = Hashing.sha256Hex(
-      s"v$ver;generic-append;parent=${parent.snapshotId};fp=$fingerprint;" +
-        s"bounds=${GraftTable.boundsSig(bounds)};blocks=$blocksDone/$numBlocks;" +
-        s"rows=${tot.getLong(1)};bytes=${tot.getLong(2)};sig=$contentSig")
-    val snap = Snapshot(ver, snapshotId, Some(parent.snapshotId), fingerprint,
-      s"generic:$key", boundsDir, numBlocks, blocksDone,
-      complete = parent.complete, tot.getLong(1), tokenCount = 0L,
-      tot.getLong(2), tot.getLong(3), contentSig, dataDirs, manifestDirs,
-      statsFields.sorted, java.time.Instant.now().toString)
-    GraftTable.writeString(
-      spark, s"$tableDir/metadata/v$ver.json", GraftTable.renderSnapshot(snap))
-    GraftTable.commitPointer(spark, tableDir, ver)
-    EncodeResult(ver, snapshotId, numBlocks, newNumBlocks.toLong, blocksDone,
-      tot.getLong(1), 0L, tot.getLong(2), tot.getLong(3), contentSig,
-      complete = parent.complete)
+  /** The current snapshot of the generic table at `tableDir`. */
+  private def genericSnapshot(spark: SparkSession, tableDir: String): Snapshot = {
+    val p = GraftTable.committed(spark, tableDir)
+    require(isGeneric(p), s"$tableDir is a token table")
+    p
   }
 
   /** Incremental compaction for the generic lane (mirror of
@@ -674,125 +582,61 @@ object GenericTable {
       tableDir: String,
       opts: Options = Options(),
       fillFactor: Double = 0.5): EncodeResult = {
-    val p = GraftTable.currentSnapshot(spark, tableDir).getOrElse(
-      throw new IllegalStateException(s"no committed snapshot at $tableDir"))
-    require(isGeneric(p), s"$tableDir is a token table — use GraftTable.compact")
-    def noop = EncodeResult(p.version, p.snapshotId, p.numBlocks, 0L,
-      p.blocksEncoded, p.rowCount, p.tokenCount, p.bytesTotal, p.plainBytes,
-      p.contentSig, p.complete)
-    if (p.dataDirs.isEmpty) return noop
-
-    val man = GraftTable.readManifest(spark, tableDir, p)
-    val perVer = man.groupBy(col("ver").cast("int").as("ver"))
-      .agg(avg(col("row_count")).as("avg_rows"), count(lit(1)).as("blocks"))
-      .collect()
-    val frag = perVer
-      .filter(_.getDouble(1) < fillFactor * opts.targetRowsPerBlock)
-      .map(_.getInt(0)).toSet
-    val fragBlocks = perVer.filter(r => frag(r.getInt(0))).map(_.getLong(2)).sum
-    if (frag.isEmpty || (frag.size == 1 && fragBlocks <= 1)) return noop
-
-    val keepData = p.dataDirs.filterNot(d => frag(versionOf(d)))
-    val keepMan = p.manifestDirs.filterNot(d => frag(versionOf(d)))
-    val fragData = p.dataDirs.filter(d => frag(versionOf(d)))
-
-    // decode ONLY the fragmented versions, projected onto the merged schema
-    val merged = readSchemaOf(p)
-    val rows = decodeFields(spark, tableDir, p.copy(dataDirs = fragData),
-      merged, merged.fieldNames.toIndexedSeq)
-    rewriteCommit(spark, tableDir, p, merged, keepData, keepMan, rows,
-      opName = "compact",
-      opDetail = s"compacted=${frag.toSeq.sorted.mkString(",")}", opts)
+    val p = genericSnapshot(spark, tableDir)
+    if (p.dataDirs.isEmpty) return EncodeResult.unchanged(p)
+    val frag = GraftTable.fragmentedVersions(
+      GraftTable.readManifest(spark, tableDir, p), fillFactor, opts.targetRowsPerBlock)
+    if (frag.isEmpty) return EncodeResult.unchanged(p)
+    rewriteCommit(spark, tableDir, p, frag, opName = "compact",
+      opDetail = s"compacted=${frag.toSeq.sorted.mkString(",")}", opts)(identity)
   }
 
   /** Copy-on-write rewrite commit shared by [[compact]] and the delete
-    * APIs: re-encodes `rows` (projected onto `merged`) as version
-    * `p.version + 1`, keeps `keepData`/`keepMan` by reference, and commits
-    * the combined snapshot. An EMPTY `rows` commits a snapshot of only the
-    * kept versions (a delete can empty every rewritten version).
+    * APIs: decodes the `rewritten` versions projected onto the current
+    * merged schema, re-encodes the rows `survivors` keeps of them as
+    * version `p.version + 1`, keeps every other version by reference, and
+    * commits the combined snapshot. No survivor commits a snapshot of only
+    * the kept versions (a delete can empty every rewritten version).
     */
   private def rewriteCommit(
       spark: SparkSession,
       tableDir: String,
       p: Snapshot,
-      merged: StructType,
-      keepData: Seq[String],
-      keepMan: Seq[String],
-      rows: DataFrame,
+      rewritten: Set[Int],
       opName: String,
       opDetail: String,
-      opts: Options): EncodeResult = {
-    val stats = p.stats.toMap
-    val key = stats(KeyKey)
-    val plan = planOf(merged)
-    val leaves = plan.flatMap(_._2)
-    val keyed = rows
-      .select(leaves.map(l => l.enc.as(l.name)) :+
-        keyExprOf(key, merged(key).dataType).as("_graft_key"): _*)
-      .withColumn("_graft_rh", rowHash(leaves))
-      .cache()
+      opts: Options)(survivors: DataFrame => DataFrame): EncodeResult = {
+    val merged = readSchemaOf(p)
+    val key = keyNameOf(p)
+    val leaves = planOf(merged).flatMap(_._2)
+    val rows = survivors(decodeFields(spark, tableDir,
+      p.copy(dataDirs = p.dataDirs.filter(d => rewritten(versionOf(d)))),
+      merged, merged.fieldNames.toIndexedSeq))
+    val keyed = keyedOf(rows, leaves, key, merged(key).dataType).cache()
     try {
       val nRows = keyed.count()
       val ver = p.version + 1
-      val (dataDirs, manifestDirs, newBlocks, freshMan) =
-        if (nRows == 0) (keepData, keepMan, 0L, None)
-        else {
-          val bounds = GraftTable.computeBounds(
-            keyed, nRows, opts.targetRowsPerBlock, opts.sampleRows)
-          val bcBounds = spark.sparkContext.broadcast(bounds)
-          val withBlocks = keyed.withColumn(
-            "block_id", graft_range_bucket(col("_graft_key"), bcBounds))
-          val dataDir = writeBlocksVersion(
-            withBlocks, tableDir, ver, leaves, bounds.length + 1, nRows)
-          val manifestDir = s"manifests/v$ver"
-          // persisted across the JSON write and the totals aggregate; a
-          // failed write must not leak the cached frame (the totals
-          // try/finally below is not yet in scope here)
-          val mf = manifestOf(spark, s"$tableDir/$dataDir", leaves.length)
-            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-          try mf.write.mode("overwrite").json(s"$tableDir/$manifestDir")
-          catch { case t: Throwable => mf.unpersist(false); throw t }
-          (keepData :+ dataDir, keepMan :+ manifestDir, bounds.length + 1L, Some(mf))
+      val fp = Hashing.sha256Hex(s"${p.inputFingerprint};$opName=v$ver")
+      def commit(fresh: Option[DataFrame], newBlocks: Long): EncodeResult =
+        Commit(spark, tableDir, ver, fresh, Some(p), rewritten, lane = "g-",
+            newBlocks = newBlocks) { t =>
+          val snapshotId = Hashing.sha256Hex(
+            s"v$ver;generic-$opName;parent=${p.snapshotId};fp=$fp;" +
+              s"$opDetail;rows=${t.rows};bytes=${t.bytes};sig=${t.contentSig}")
+          Commit.Head(snapshotId, Some(p.snapshotId), fp, s"generic:$key", p.boundsDir,
+            t.blocks.toInt, p.complete,
+            (genericMeta(t.rows, merged, Some(merged), key, leaves) ++
+              GraftTable.carriedMeta(Some(p))).toSeq)
         }
-      val tot = try {
-        if (manifestDirs.isEmpty) (0L, 0L, 0L, 0L, 0L)
-        else {
-          val all = freshMan match {
-            case Some(mf) =>
-              GraftTable.manifestTotalsWithFresh(spark, tableDir, keepMan, mf)
-            case None => GraftTable.readManifestTotals(spark, tableDir, manifestDirs)
-          }
-          val t = all.agg(
-            count(lit(1)).as("blocks"), sum("row_count").as("rows"),
-            sum("bytes_total").as("bytes"), sum("plain_bytes").as("plain"),
-            expr("bit_xor(block_sig)").as("sig")).head()
-          (t.getLong(0), t.getLong(1), t.getLong(2), t.getLong(3), t.getLong(4))
-        }
-      } finally freshMan.foreach(_.unpersist(false))
-      val contentSig = f"${tot._5}%016x"
-      val combinedFp = Hashing.sha256Hex(s"${p.inputFingerprint};$opName=v$ver")
-      val statsFields = (Map(
-        "rows" -> tot._2.toString,
-        SchemaKey -> merged.json,
-        WriteSchemaKey -> merged.json,
-        KeyKey -> key,
-        "generic_leaves" -> leaves.map(l => s"${l.kind}:${l.name}").mkString("\u001f")) ++
-        carriedMeta(Some(p))).toSeq
-      val snapshotId = Hashing.sha256Hex(
-        s"v$ver;generic-$opName;parent=${p.snapshotId};fp=$combinedFp;" +
-          s"$opDetail;rows=${tot._2};" +
-          s"bytes=${tot._3};sig=$contentSig")
-      val snap = Snapshot(ver, snapshotId, Some(p.snapshotId), combinedFp,
-        s"generic:$key", p.boundsDir, tot._1.toInt, tot._1,
-        complete = p.complete, tot._2, tokenCount = 0L,
-        tot._3, tot._4, contentSig, dataDirs, manifestDirs,
-        statsFields.sorted, java.time.Instant.now().toString)
-      GraftTable.writeString(
-        spark, s"$tableDir/metadata/v$ver.json", GraftTable.renderSnapshot(snap))
-      GraftTable.commitPointer(spark, tableDir, ver)
-      EncodeResult(ver, snapshotId, tot._1.toInt, newBlocks,
-        tot._1, tot._2, 0L, tot._3, tot._4,
-        contentSig, complete = p.complete)
+      if (nRows == 0) commit(None, 0L)
+      else {
+        val bounds = GraftTable.computeBounds(
+          keyed, nRows, opts.targetRowsPerBlock, opts.sampleRows)
+        writeBlocksVersion(
+          withBlockIds(keyed, bounds), tableDir, ver, leaves, bounds.length + 1, nRows)
+        Commit.withManifest(tableDir, ver, manifestOf(spark, _, leaves.length))(
+          fresh => commit(Some(fresh), bounds.length + 1L))
+      }
     } finally keyed.unpersist()
   }
 
@@ -818,13 +662,8 @@ object GenericTable {
       tableDir: String,
       predicate: Column,
       opts: Options = Options()): EncodeResult = {
-    val p = GraftTable.currentSnapshot(spark, tableDir).getOrElse(
-      throw new IllegalStateException(s"no committed snapshot at $tableDir"))
-    require(isGeneric(p), s"$tableDir is a token table")
-    def noop = EncodeResult(p.version, p.snapshotId, p.numBlocks, 0L,
-      p.blocksEncoded, p.rowCount, p.tokenCount, p.bytesTotal, p.plainBytes,
-      p.contentSig, p.complete)
-    if (p.dataDirs.isEmpty) return noop
+    val p = genericSnapshot(spark, tableDir)
+    if (p.dataDirs.isEmpty) return EncodeResult.unchanged(p)
     val merged = readSchemaOf(p)
     // detection scan: only the columns the predicate references (all, if
     // the expression is opaque). Each reference is matched by its FIRST
@@ -851,16 +690,10 @@ object GenericTable {
       "internal: version attribution failed — a data file path did not " +
         "match data/v<N> (input_file_name detection)")
     val affected = hitRows.map(_.getInt(0)).toSet
-    if (affected.isEmpty) return noop
-    val keepData = p.dataDirs.filterNot(d => affected(versionOf(d)))
-    val keepMan = p.manifestDirs.filterNot(d => affected(versionOf(d)))
-    val hitData = p.dataDirs.filter(d => affected(versionOf(d)))
-    val survivors = decodeFields(spark, tableDir, p.copy(dataDirs = hitData),
-      merged, merged.fieldNames.toIndexedSeq)
-      .where(coalesce(!predicate, lit(true)))
-    rewriteCommit(spark, tableDir, p, merged, keepData, keepMan, survivors,
-      opName = "delete",
-      opDetail = s"deleted-from=${affected.toSeq.sorted.mkString(",")}", opts)
+    if (affected.isEmpty) return EncodeResult.unchanged(p)
+    rewriteCommit(spark, tableDir, p, affected, opName = "delete",
+      opDetail = s"deleted-from=${affected.toSeq.sorted.mkString(",")}", opts)(
+      _.where(coalesce(!predicate, lit(true))))
   }
 
   /** Copy-on-write delete of every row whose KEY appears in `keys` (one
@@ -876,36 +709,25 @@ object GenericTable {
       tableDir: String,
       keys: DataFrame,
       opts: Options = Options()): EncodeResult = {
-    val p = GraftTable.currentSnapshot(spark, tableDir).getOrElse(
-      throw new IllegalStateException(s"no committed snapshot at $tableDir"))
-    require(isGeneric(p), s"$tableDir is a token table")
+    val p = genericSnapshot(spark, tableDir)
     require(keys.columns.length == 1,
       s"deleteKeys takes a single-column frame, got ${keys.columns.mkString(",")}")
-    def noop = EncodeResult(p.version, p.snapshotId, p.numBlocks, 0L,
-      p.blocksEncoded, p.rowCount, p.tokenCount, p.bytesTotal, p.plainBytes,
-      p.contentSig, p.complete)
-    if (p.dataDirs.isEmpty) return noop
-    val merged = readSchemaOf(p)
+    if (p.dataDirs.isEmpty) return EncodeResult.unchanged(p)
     val key = keyNameOf(p)
-    val kt = merged(key).dataType
+    val kt = readSchemaOf(p)(key).dataType
     val kRaw = keys.select(col(keys.columns.head).cast(kt).as("__dk"))
       .where(col("__dk").isNotNull).distinct().cache()
     try {
-      if (kRaw.isEmpty) return noop
+      if (kRaw.isEmpty) return EncodeResult.unchanged(p)
       // conservative version prune: the keys' order-domain envelope
       val env = kRaw.select(keyExprOf("__dk", kt).as("_k"))
         .agg(min(col("_k")), max(col("_k"))).head()
-      val hitData = rangeDataDirs(spark, tableDir, p, env.getLong(0), env.getLong(1))
-      if (hitData.isEmpty) return noop
-      val hit = hitData.map(versionOf).toSet
-      val keepData = p.dataDirs.filterNot(d => hit(versionOf(d)))
-      val keepMan = p.manifestDirs.filterNot(d => hit(versionOf(d)))
-      val survivors = decodeFields(spark, tableDir, p.copy(dataDirs = hitData),
-        merged, merged.fieldNames.toIndexedSeq)
-        .join(kRaw, col(quoted(key)) === col("__dk"), "left_anti")
-      rewriteCommit(spark, tableDir, p, merged, keepData, keepMan, survivors,
-        opName = "delete",
-        opDetail = s"deleted-keys;from=${hit.toSeq.sorted.mkString(",")}", opts)
+      val hit = rangeDataDirs(spark, tableDir, p, env.getLong(0), env.getLong(1))
+        .map(versionOf).toSet
+      if (hit.isEmpty) return EncodeResult.unchanged(p)
+      rewriteCommit(spark, tableDir, p, hit, opName = "delete",
+        opDetail = s"deleted-keys;from=${hit.toSeq.sorted.mkString(",")}", opts)(
+        _.join(kRaw, col(quoted(key)) === col("__dk"), "left_anti"))
     } finally kRaw.unpersist()
   }
 
@@ -922,10 +744,7 @@ object GenericTable {
       tableDir: String,
       opts: Options = Options()): EncodeResult = {
     val spark = batch.sparkSession
-    val p = GraftTable.currentSnapshot(spark, tableDir).getOrElse(
-      throw new IllegalStateException(s"no committed snapshot at $tableDir"))
-    require(isGeneric(p), s"$tableDir is a token table")
-    val key = keyNameOf(p)
+    val key = keyNameOf(genericSnapshot(spark, tableDir))
     require(batch.columns.contains(key),
       s"upsert batch must carry the table key column $key")
     deleteKeys(spark, tableDir, batch.select(col(quoted(key))), opts)
@@ -944,36 +763,24 @@ object GenericTable {
       lo: Long,
       hi: Long,
       opts: Options = Options()): EncodeResult = {
-    val p = GraftTable.currentSnapshot(spark, tableDir).getOrElse(
-      throw new IllegalStateException(s"no committed snapshot at $tableDir"))
-    require(isGeneric(p), s"$tableDir is a token table")
-    def noop = EncodeResult(p.version, p.snapshotId, p.numBlocks, 0L,
-      p.blocksEncoded, p.rowCount, p.tokenCount, p.bytesTotal, p.plainBytes,
-      p.contentSig, p.complete)
-    if (p.dataDirs.isEmpty) return noop
-    val merged = readSchemaOf(p)
+    val p = genericSnapshot(spark, tableDir)
+    if (p.dataDirs.isEmpty) return EncodeResult.unchanged(p)
     val key = keyNameOf(p)
-    val hitData = rangeDataDirs(spark, tableDir, p, lo, hi)
-    if (hitData.isEmpty) return noop
-    val hit = hitData.map(versionOf).toSet
-    val keepData = p.dataDirs.filterNot(d => hit(versionOf(d)))
-    val keepMan = p.manifestDirs.filterNot(d => hit(versionOf(d)))
+    val hit = rangeDataDirs(spark, tableDir, p, lo, hi).map(versionOf).toSet
+    if (hit.isEmpty) return EncodeResult.unchanged(p)
     // the range addresses the key ORDER DOMAIN (keyExprOf), exactly like
     // decodeRange: for integral keys that IS the value; null keys are
     // explicitly kept (a range never deletes null keys)
-    val kc = keyExprOf(key, merged(key).dataType)
-    val survivors = decodeFields(spark, tableDir, p.copy(dataDirs = hitData),
-      merged, merged.fieldNames.toIndexedSeq)
-      .where(col(quoted(key)).isNull || !kc.between(lo, hi))
-    rewriteCommit(spark, tableDir, p, merged, keepData, keepMan, survivors,
-      opName = "delete",
-      opDetail = s"deleted-range=[$lo,$hi];from=${hit.toSeq.sorted.mkString(",")}", opts)
+    val kc = keyExprOf(key, readSchemaOf(p)(key).dataType)
+    rewriteCommit(spark, tableDir, p, hit, opName = "delete",
+      opDetail = s"deleted-range=[$lo,$hi];from=${hit.toSeq.sorted.mkString(",")}", opts)(
+      _.where(col(quoted(key)).isNull || !kc.between(lo, hi)))
   }
 
-  /** The shared block-encode pipeline of encode() and append(): one
+  /** The shared block-encode pipeline of every generic write: one
     * explicit hash exchange on block_id (spill-aware partition count),
     * Tungsten sortWithinPartitions, streaming one-block-at-a-time
-    * assembly; writes `data/v<ver>` and returns its relative dir.
+    * assembly; writes `data/v<ver>`.
     */
   private def writeBlocksVersion(
       withBlocks: DataFrame,
@@ -981,7 +788,7 @@ object GenericTable {
       ver: Int,
       leaves: Seq[Leaf],
       numBlocks: Int,
-      rows: Long): String = {
+      rows: Long): Unit = {
     val spark = withBlocks.sparkSession
     val parallelism = spark.sparkContext.defaultParallelism
     val encodeParts = GraftTable.encodePartitions(
@@ -1003,9 +810,8 @@ object GenericTable {
       .repartition(encodeParts, col("block_id"))
       .sortWithinPartitions(col("block_id"), col("k"), col("rh"))
       .mapPartitions(it => GenericAssembler.assemble(it, ver, kinds))(Encoders.row(outSchema))
-    val dataDir = s"data/v$ver"
-    blocks.write.mode("overwrite").parquet(s"$tableDir/$dataDir")
-    dataDir
+    timed("g-encode+write")(
+      blocks.write.mode("overwrite").parquet(s"$tableDir/${Commit.dataDir(ver)}"))
   }
 
   /** Manifest from the WRITTEN data files: per-leaf codec evidence + sizes
@@ -1040,8 +846,7 @@ object GenericTable {
     * per row (order not guaranteed, as with any distributed scan).
     */
   def decode(spark: SparkSession, tableDir: String): DataFrame = {
-    val snap = GraftTable.currentSnapshot(spark, tableDir).getOrElse(
-      throw new IllegalStateException(s"no committed snapshot at $tableDir"))
+    val snap = GraftTable.committed(spark, tableDir)
     val schema = readSchemaOf(snap)
     decodeFields(spark, tableDir, snap, schema, schema.fieldNames.toIndexedSeq)
   }
@@ -1061,8 +866,7 @@ object GenericTable {
     */
   def decodeSelect(
       spark: SparkSession, tableDir: String, columns: Seq[String]): DataFrame = {
-    val snap = GraftTable.currentSnapshot(spark, tableDir).getOrElse(
-      throw new IllegalStateException(s"no committed snapshot at $tableDir"))
+    val snap = GraftTable.committed(spark, tableDir)
     val schema = readSchemaOf(snap)
     require(columns.nonEmpty && columns.forall(schema.fieldNames.contains),
       s"decodeSelect columns must be among ${schema.fieldNames.mkString(", ")}")
@@ -1099,8 +903,7 @@ object GenericTable {
     */
   def decodeRange(
       spark: SparkSession, tableDir: String, lo: Long, hi: Long): DataFrame = {
-    val snap = GraftTable.currentSnapshot(spark, tableDir).getOrElse(
-      throw new IllegalStateException(s"no committed snapshot at $tableDir"))
+    val snap = GraftTable.committed(spark, tableDir)
     val schema = readSchemaOf(snap)
     val key = snap.stats.toMap.apply(KeyKey)
     val pruned = decodeFields(spark, tableDir, snap, schema,
@@ -1220,8 +1023,7 @@ object GenericTable {
     * explode instead of a per-leaf union.
     */
   def describe(spark: SparkSession, tableDir: String): DataFrame = {
-    val snap = GraftTable.currentSnapshot(spark, tableDir).getOrElse(
-      throw new IllegalStateException(s"no committed snapshot at $tableDir"))
+    val snap = GraftTable.committed(spark, tableDir)
     val byVersion = snap.manifestDirs.groupBy(versionOf).toSeq.sortBy(_._1).map {
       case (ver, dirs) =>
         val vsnap =

@@ -9,6 +9,7 @@ import org.apache.spark.sql.types.{LongType, StructField, StructType}
 import org.json4s._
 import org.json4s.jackson.JsonMethods
 
+import graft.Timing.timed
 import graft.codec.Hashing
 import graft.functions._
 
@@ -114,6 +115,16 @@ object GraftTable {
       if (plainBytes == 0) 1.0 else bytesTotal.toDouble / plainBytes
   }
 
+  object EncodeResult {
+    private[table] def apply(s: Snapshot, blocksEncodedThisRun: Long): EncodeResult =
+      EncodeResult(s.version, s.snapshotId, s.numBlocks, blocksEncodedThisRun,
+        s.blocksEncoded, s.rowCount, s.tokenCount, s.bytesTotal, s.plainBytes,
+        s.contentSig, s.complete)
+
+    /** A write that committed nothing: the current snapshot `s` stands. */
+    private[table] def unchanged(s: Snapshot): EncodeResult = apply(s, 0L)
+  }
+
   /** Blocking/sort key: numeric doc_id when the string is a canonical
     * decimal (the input_hint corpus), else a deterministic 64-bit hash —
     * blocking stays valid, range pruning degrades gracefully.
@@ -122,17 +133,6 @@ object GraftTable {
   private val KeyStrategy = "numeric_or_xxhash64"
 
   // ------------------------------------------------------------- encode
-
-  private val timing = sys.env.get("GRAFT_TIMING").contains("1")
-  private def timed[T](label: String)(f: => T): T = {
-    if (!timing) f
-    else {
-      val t0 = System.nanoTime()
-      val r = f
-      println(f"GRAFT_TIMING $label ${(System.nanoTime() - t0) / 1e9}%.2fs")
-      r
-    }
-  }
 
   /** Input contract: `doc_id` values are unique (the input_hint's table
     * key). Duplicate ids still round-trip correctly, but rows that tie on
@@ -175,9 +175,7 @@ object GraftTable {
     // of this input — return without loading bounds, broadcasting, or
     // running an empty encode job (at 15M blocks those cost real seconds)
     parent.filter(p => p.complete && opts.blockFilter.isEmpty).foreach { p =>
-      return EncodeResult(p.version, p.snapshotId, p.numBlocks, 0L,
-        p.blocksEncoded, p.rowCount, p.tokenCount, p.bytesTotal, p.plainBytes,
-        p.contentSig, complete = true)
+      return EncodeResult.unchanged(p)
     }
     val ver = cur.map(_.version).getOrElse(0) + 1
 
@@ -242,29 +240,68 @@ object GraftTable {
       case None => notDone
     }
 
-    // block assembly: ONE shuffle (explicit repartition on block_id — the
-    // fixed partition count is immune to AQE's bytes-based coalescing,
-    // which would serialize this CPU-bound stage) + sortWithinPartitions
-    // (Tungsten external sort, spill-safe) + a streaming per-partition
-    // grouper that holds exactly ONE block in memory while encoding.
-    //
-    // A declarative groupBy + array_sort(collect_list(...)) is the obvious
-    // alternative, but collect_list's map-side partial aggregation buffers
-    // entire shuffle partitions in the agg hash map (no size reduction —
-    // measured 3–13× slower with erratic spill behavior at a few hundred
-    // MB). mapPartitions over the sorted stream is the memory-bounded
-    // typed-Dataset form of the same plan.
+    writeBlocksVersion(todo, tableDir, ver, numBlocks, stats)
+    Commit.withManifest(tableDir, ver, manifestOf(spark, _)) { fresh =>
+      val newBlocks = timed("manifest-count")(fresh.count())
+      // no new block: drop the empty version dir. With a parent, nothing
+      // happened and the current snapshot stands; without one (empty
+      // input), commit an empty complete snapshot with no manifest dir —
+      // spark.read.json cannot infer a schema from a rowless one
+      if (newBlocks == 0) delete(spark, s"$tableDir/${Commit.dataDir(ver)}")
+      if (newBlocks == 0 && parent.nonEmpty) EncodeResult.unchanged(parent.get)
+      else {
+        val written = Some(fresh).filter(_ => newBlocks > 0)
+        Commit(spark, tableDir, ver, written, parent, lane = "", newBlocks = newBlocks) { t =>
+          val nb = if (written.isEmpty) 0 else numBlocks
+          val snapshotId = Hashing.sha256Hex(
+            if (written.isEmpty) s"v$ver;parent=none;fp=${stats.fingerprint};empty"
+            else s"v$ver;parent=${parent.map(_.snapshotId).getOrElse("none")};" +
+              s"fp=${stats.fingerprint};bounds=${boundsRef.sigHex()};" +
+              s"blocks=${t.blocks}/$numBlocks;rows=${t.rows};" +
+              s"tokens=${t.tokens};bytes=${t.bytes};sig=${t.contentSig}")
+          Commit.Head(snapshotId, parent.map(_.snapshotId), stats.fingerprint, KeyStrategy,
+            boundsDir, nb, complete = t.blocks == nb, stats.asJsonFields ++ meta.toSeq)
+        }
+      }
+    }
+    } finally if (keyedCached) { keyed.unpersist(false); () }
+  }
+
+  /** The token lane's block pipeline, shared by encode, append and
+    * compact; `withBlocks` is the keyed frame with its `block_id`.
+    *
+    * Block assembly is ONE shuffle (explicit repartition on block_id — the
+    * fixed partition count is immune to AQE's bytes-based coalescing,
+    * which would serialize this CPU-bound stage) + sortWithinPartitions
+    * (Tungsten external sort, spill-safe) + a streaming per-partition
+    * grouper that holds exactly ONE block in memory while encoding.
+    *
+    * A declarative groupBy + array_sort(collect_list(...)) is the obvious
+    * alternative, but collect_list's map-side partial aggregation buffers
+    * entire shuffle partitions in the agg hash map (no size reduction —
+    * measured 3–13× slower with erratic spill behavior at a few hundred
+    * MB). mapPartitions over the sorted stream is the memory-bounded
+    * typed-Dataset form of the same plan.
+    *
+    * Tokens are FOR-packed on the MAP side: they dominate the one data
+    * shuffle, and ~5-bit ids packed cut MEASURED shuffle-write bytes
+    * 3.8× even after lz4 (828 MB → 217 MB for 270M tokens —
+    * tools/ShuffleProbe), plus the corresponding serialization CPU
+    * (shuffle+sort 3.7 s → 3.2 s at local[8]). On a real cluster those
+    * bytes cross the network. BlockAssembler unpacks after the exchange;
+    * table bytes are unchanged (packing is per-row and lossless).
+    *
+    * Overwrite: a same-version dir can only be an orphan from a crashed
+    * run (versions enter data_dirs only after the snapshot commit).
+    */
+  private def writeBlocksVersion(
+      withBlocks: DataFrame, tableDir: String, ver: Int, numBlocks: Int,
+      stats: ColumnStats): Unit = {
+    val spark = withBlocks.sparkSession
     import spark.implicits._
-    val parallelism = spark.sparkContext.defaultParallelism
-    val encodeParts = encodePartitions(numBlocks, parallelism, stats.tokensTotal)
-    // tokens are FOR-packed on the MAP side: they dominate the one data
-    // shuffle, and ~5-bit ids packed cut MEASURED shuffle-write bytes
-    // 3.8× even after lz4 (828 MB → 217 MB for 270M tokens —
-    // tools/ShuffleProbe), plus the corresponding serialization CPU
-    // (shuffle+sort 3.7 s → 3.2 s at local[8]). On a real cluster those
-    // bytes cross the network. BlockAssembler unpacks after the exchange;
-    // table bytes are unchanged (packing is per-row and lossless).
-    val blocks = todo
+    val encodeParts = encodePartitions(
+      numBlocks, spark.sparkContext.defaultParallelism, stats.tokensTotal)
+    val blocks = withBlocks
       .select(col("block_id"), col("_graft_key").as("k"), col("doc_id"),
         graft_encode(col("tokens"), "for").as("tokens"),
         col("n_tok"), col("source"))
@@ -273,152 +310,36 @@ object GraftTable {
       .as[BlockInput]
       .mapPartitions(it =>
         BlockAssembler.assemble(it, ver, stats.allowDict, stats.allowFsst))
-
-    // overwrite: a same-version dir can only be an orphan from a crashed
-    // run (versions enter data_dirs only after the snapshot commit below)
-    val dataDir = s"data/v$ver"
     timed("encode+write")(
-      blocks.write.mode("overwrite").parquet(s"$tableDir/$dataDir"))
-
-    // manifest from the WRITTEN files (column-pruned scan, no re-encode);
-    // persisted so count + JSON write share one computation instead of
-    // re-aggregating the written blocks twice
-    val manifest = manifestOf(spark, s"$tableDir/$dataDir")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-    val newBlocks = timed("manifest-count")(manifest.count())
-    if (newBlocks == 0 && parent.nonEmpty) {
-      // nothing to do: drop the empty version dir, current snapshot stands
-      delete(spark, s"$tableDir/$dataDir")
-      val p = parent.get
-      return EncodeResult(p.version, p.snapshotId, p.numBlocks, 0L,
-        p.blocksEncoded, p.rowCount, p.tokenCount, p.bytesTotal, p.plainBytes,
-        p.contentSig, p.complete)
-    }
-    if (newBlocks == 0) {
-      // empty input, no parent: commit an empty (complete) snapshot —
-      // spark.read.json cannot infer a schema from a rowless manifest dir
-      delete(spark, s"$tableDir/$dataDir")
-      val snapshotId = Hashing.sha256Hex(
-        s"v$ver;parent=none;fp=${stats.fingerprint};empty")
-      val snap = Snapshot(ver, snapshotId, None, stats.fingerprint,
-        KeyStrategy, boundsDir, numBlocks = 0, blocksEncoded = 0L,
-        complete = true, rowCount = 0L, tokenCount = 0L, bytesTotal = 0L,
-        plainBytes = 0L, contentSig = "0" * 16, dataDirs = Nil,
-        manifestDirs = Nil, stats = (stats.asJsonFields ++ meta.toSeq).sorted,
-        committedAt = java.time.Instant.now().toString)
-      writeString(spark, s"$tableDir/metadata/v$ver.json", renderSnapshot(snap))
-      commitPointer(spark, tableDir, ver)
-      return EncodeResult(ver, snapshotId, 0, 0L, 0L, 0L, 0L, 0L, 0L,
-        snap.contentSig, complete = true)
-    }
-
-    val manifestDir = s"manifests/v$ver"
-    timed("manifest-write")(manifest.write.mode("overwrite").json(s"$tableDir/$manifestDir"))
-
-    val manifestDirs = parent.map(_.manifestDirs).getOrElse(Nil) :+ manifestDir
-    val dataDirs = parent.map(_.dataDirs).getOrElse(Nil) :+ dataDir
-
-    // snapshot totals over ALL live manifests: O(1) driver state; the new
-    // version comes from the still-persisted manifest frame, so only
-    // pre-existing manifest dirs are read back from JSON
-    val all = manifestTotalsWithFresh(
-      spark, tableDir, parent.map(_.manifestDirs).getOrElse(Nil), manifest)
-    val tot = timed("totals")(all.agg(
-      count(lit(1)).as("blocks"),
-      sum("row_count").as("rows"),
-      sum("token_count").as("tokens"),
-      sum("bytes_total").as("bytes"),
-      sum("plain_bytes").as("plain"),
-      expr("bit_xor(block_sig)").as("sig")).head())
-
-    val blocksDone = tot.getLong(0)
-    val contentSig = f"${tot.getLong(5)}%016x"
-    val complete = blocksDone == numBlocks
-    val snapshotId = Hashing.sha256Hex(
-      s"v$ver;parent=${parent.map(_.snapshotId).getOrElse("none")};" +
-        s"fp=${stats.fingerprint};bounds=${boundsRef.sigHex()};" +
-        s"blocks=$blocksDone/$numBlocks;rows=${tot.getLong(1)};" +
-        s"tokens=${tot.getLong(2)};bytes=${tot.getLong(3)};sig=$contentSig")
-
-    val snap = Snapshot(
-      version = ver,
-      snapshotId = snapshotId,
-      parentId = parent.map(_.snapshotId),
-      inputFingerprint = stats.fingerprint,
-      keyStrategy = KeyStrategy,
-      boundsDir = boundsDir,
-      numBlocks = numBlocks,
-      blocksEncoded = blocksDone,
-      complete = complete,
-      rowCount = tot.getLong(1),
-      tokenCount = tot.getLong(2),
-      bytesTotal = tot.getLong(3),
-      plainBytes = tot.getLong(4),
-      contentSig = contentSig,
-      dataDirs = dataDirs,
-      manifestDirs = manifestDirs,
-      stats = (stats.asJsonFields ++ meta.toSeq).sorted,
-      committedAt = java.time.Instant.now().toString)
-
-    writeString(spark, s"$tableDir/metadata/v$ver.json", renderSnapshot(snap))
-    commitPointer(spark, tableDir, ver)
-
-    EncodeResult(ver, snapshotId, numBlocks, newBlocks, blocksDone,
-      tot.getLong(1), tot.getLong(2), tot.getLong(3), tot.getLong(4),
-      contentSig, complete)
-    } finally { manifest.unpersist(false); () }
-    } finally if (keyedCached) { keyed.unpersist(false); () }
+      blocks.write.mode("overwrite").parquet(s"$tableDir/${Commit.dataDir(ver)}"))
   }
 
   /** `stream_*` snapshot metadata (the streaming sink's exactly-once
     * batchId watermark) inherited from the parent snapshot when the caller
     * doesn't override it, so compaction / manual writes interleaved with an
-    * active stream never erase the replay guard (ADVICE r2).
+    * active stream never erase the replay guard (ADVICE r2). Both lanes.
     */
-  private def carriedMeta(parent: Option[Snapshot]): Map[String, String] =
+  private[table] def carriedMeta(parent: Option[Snapshot]): Map[String, String] =
     parent.map(_.stats.filter(_._1.startsWith("stream_")).toMap)
       .getOrElse(Map.empty)
 
-  /** Totals-projection schema for manifest JSON reads: every totals
-    * aggregate in the commit paths touches only these five LONG fields, so
-    * reading with an explicit schema skips spark.read.json's
-    * schema-inference pass (a full extra read of every manifest file).
-    * Token-lane manifests carry all five; generic-lane manifests have no
-    * token_count (reads null, which no generic consumer aggregates).
+  /** Compaction's fragment picker, both lanes: versions of manifest `man`
+    * whose average block row count is below `fillFactor × targetRows`.
+    * Empty when there is nothing to merge — no fragment, or one fragment
+    * that is one block.
     */
-  private[table] val manifestTotalsSchema = StructType(Seq(
-    StructField("row_count", LongType),
-    StructField("token_count", LongType),
-    StructField("bytes_total", LongType),
-    StructField("plain_bytes", LongType),
-    StructField("block_sig", LongType)))
-
-  private[table] def readManifestTotals(
-      spark: SparkSession, tableDir: String, manifestDirs: Seq[String]): DataFrame =
-    spark.read.schema(manifestTotalsSchema)
-      .json(manifestDirs.map(d => s"$tableDir/$d"): _*)
-
-  /** Totals frame over live manifests where the LAST dir was just written
-    * from `fresh`: pre-existing dirs read their (small) JSON files; the
-    * new version aggregates the in-memory frame that produced its file —
-    * the totals job never re-reads data the same commit just wrote.
-    * Columns are pinned to [[manifestTotalsSchema]]; generic manifests
-    * carry no token_count and contribute null there, exactly as the JSON
-    * read would.
-    */
-  private[table] def manifestTotalsWithFresh(
-      spark: SparkSession, tableDir: String,
-      oldDirs: Seq[String], fresh: DataFrame): DataFrame = {
-    val freshCols = fresh.columns.toSet
-    val freshTot = fresh.select(manifestTotalsSchema.fields.toIndexedSeq.map(f =>
-      (if (freshCols(f.name)) col(f.name).cast(f.dataType)
-       else lit(null).cast(f.dataType)).as(f.name)): _*)
-    if (oldDirs.isEmpty) freshTot
-    else readManifestTotals(spark, tableDir, oldDirs).unionByName(freshTot)
+  private[table] def fragmentedVersions(
+      man: DataFrame, fillFactor: Double, targetRows: Int): Set[Int] = {
+    val perVer = man.groupBy(col("ver").cast("int").as("ver"))
+      .agg(avg(col("row_count")).as("avg_rows"), count(lit(1)).as("blocks"))
+      .collect()
+    val frag = perVer.filter(_.getDouble(1) < fillFactor * targetRows).map(_.getInt(0)).toSet
+    val fragBlocks = perVer.filter(r => frag(r.getInt(0))).map(_.getLong(2)).sum
+    if (frag.size == 1 && fragBlocks <= 1) Set.empty else frag
   }
 
-  /** Key-span projection for version pruning (same pinned-schema idiom). */
+  /** Key-span projection for version pruning (explicit schema: skips the
+    * manifest JSON schema-inference pass). */
   private[graft] val manifestSpanSchema = StructType(Seq(
     StructField("ver", LongType),
     StructField("key_min", LongType),
@@ -768,8 +689,7 @@ object GraftTable {
     * scan needs no manifest join.
     */
   def readBlocks(spark: SparkSession, tableDir: String): DataFrame =
-    readBlocks(spark, tableDir, currentSnapshot(spark, tableDir).getOrElse(
-      throw new IllegalStateException(s"no committed snapshot at $tableDir")))
+    readBlocks(spark, tableDir, committed(spark, tableDir))
 
   def readBlocks(spark: SparkSession, tableDir: String, snap: Snapshot): DataFrame = {
     if (snap.dataDirs.isEmpty) {
@@ -814,8 +734,7 @@ object GraftTable {
     */
   def decode(spark: SparkSession, tableDir: String): Dataset[TokenRow] = {
     import spark.implicits._
-    decodeSnap(spark, currentSnapshot(spark, tableDir).getOrElse(
-      throw new IllegalStateException(s"no committed snapshot at $tableDir")), tableDir)
+    decodeSnap(spark, committed(spark, tableDir), tableDir)
   }
 
   private def decodeSnap(
@@ -915,71 +834,42 @@ object GraftTable {
       col("doc_id"), col("tokens"), col("n_tok"), col("source"),
       expr(KeyExpr).as("_graft_key"))
     val stats = Stats.collect(keyed, opts.sampleRows)
-    if (stats.rows == 0L)
-      return EncodeResult(p.version, p.snapshotId, p.numBlocks, 0L,
-        p.blocksEncoded, p.rowCount, p.tokenCount, p.bytesTotal, p.plainBytes,
-        p.contentSig, p.complete)
+    if (stats.rows == 0L) return EncodeResult.unchanged(p)
 
     val blockOffset =
       if (p.manifestDirs.isEmpty) 0
       else readManifest(spark, tableDir, p)
         .agg(max(col("block_id").cast("int"))).head().getInt(0) + 1
-    // batch bounds are ephemeral (blocks are assigned and written within
-    // this call; append has no mid-batch resume) — broadcast only, no file
+    val numNew = writeBatchVersion(keyed, tableDir, ver, blockOffset, stats, opts)
+    val combinedFp = Hashing.sha256Hex(s"${p.inputFingerprint}+${stats.fingerprint}")
+    Commit.withManifest(tableDir, ver, manifestOf(spark, _)) { fresh =>
+      Commit(spark, tableDir, ver, Some(fresh), Some(p), lane = "", newBlocks = numNew) { t =>
+        val snapshotId = Hashing.sha256Hex(
+          s"v$ver;parent=${p.snapshotId};fp=$combinedFp;append=$numNew;" +
+            s"rows=${t.rows};tokens=${t.tokens};bytes=${t.bytes};sig=${t.contentSig}")
+        Commit.Head(snapshotId, Some(p.snapshotId), combinedFp, KeyStrategy, p.boundsDir,
+          p.numBlocks + numNew, complete = true,
+          stats.asJsonFields ++ (carriedMeta(Some(p)) ++ extraMeta).toSeq)
+      }
+    }
+  }
+
+  /** Encodes `keyed` as version `ver` under its own range bounds, block ids
+    * starting at `blockOffset`; returns the number of new blocks. The
+    * bounds are ephemeral (blocks are assigned and written within this
+    * call; append and compact have no mid-batch resume), so they are only
+    * broadcast, never written to a file.
+    */
+  private def writeBatchVersion(keyed: DataFrame, tableDir: String, ver: Int,
+      blockOffset: Int, stats: ColumnStats, opts: Options): Int = {
+    val spark = keyed.sparkSession
     val bounds = computeBounds(keyed, stats.rows, opts.targetRowsPerBlock, opts.sampleRows)
     val bcBounds = spark.sparkContext.broadcast(bounds)
     val numNew = bounds.length + 1
-
-    import spark.implicits._
-    val parallelism = spark.sparkContext.defaultParallelism
-    val encodeParts = encodePartitions(numNew, parallelism, stats.tokensTotal)
-    val blocks = keyed
-      .select(
-        (graft_range_bucket(col("_graft_key"), bcBounds) + blockOffset).as("block_id"),
-        col("_graft_key").as("k"), col("doc_id"),
-        graft_encode(col("tokens"), "for").as("tokens"),
-        col("n_tok"), col("source"))
-      .repartition(encodeParts, col("block_id"))
-      .sortWithinPartitions(col("block_id"), col("k"), col("doc_id"))
-      .as[BlockInput]
-      .mapPartitions(it =>
-        BlockAssembler.assemble(it, ver, stats.allowDict, stats.allowFsst))
-
-    val dataDir = s"data/v$ver"
-    blocks.write.mode("overwrite").parquet(s"$tableDir/$dataDir")
-    // persisted across the JSON write and the totals aggregate: one pass
-    // over the written blocks, and totals never re-read this version
-    val manifest = manifestOf(spark, s"$tableDir/$dataDir")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val manifestDir = s"manifests/v$ver"
-    val manifestDirs = p.manifestDirs :+ manifestDir
-    val dataDirs = p.dataDirs :+ dataDir
-    val tot = try {
-      manifest.write.mode("overwrite").json(s"$tableDir/$manifestDir")
-      manifestTotalsWithFresh(spark, tableDir, p.manifestDirs, manifest).agg(
-        count(lit(1)).as("blocks"), sum("row_count").as("rows"),
-        sum("token_count").as("tokens"), sum("bytes_total").as("bytes"),
-        sum("plain_bytes").as("plain"), expr("bit_xor(block_sig)").as("sig")).head()
-    } finally { manifest.unpersist(false); () }
-
-    val combinedFp = Hashing.sha256Hex(s"${p.inputFingerprint}+${stats.fingerprint}")
-    val contentSig = f"${tot.getLong(5)}%016x"
-    val totalBlocks = p.numBlocks + numNew
-    val snapshotId = Hashing.sha256Hex(
-      s"v$ver;parent=${p.snapshotId};fp=$combinedFp;append=$numNew;" +
-        s"rows=${tot.getLong(1)};tokens=${tot.getLong(2)};" +
-        s"bytes=${tot.getLong(3)};sig=$contentSig")
-    val snap = Snapshot(ver, snapshotId, Some(p.snapshotId), combinedFp,
-      KeyStrategy, p.boundsDir, totalBlocks, tot.getLong(0), complete = true,
-      tot.getLong(1), tot.getLong(2), tot.getLong(3), tot.getLong(4),
-      contentSig, dataDirs, manifestDirs,
-      (stats.asJsonFields ++ (carriedMeta(Some(p)) ++ extraMeta).toSeq).sorted,
-      java.time.Instant.now().toString)
-    writeString(spark, s"$tableDir/metadata/v$ver.json", renderSnapshot(snap))
-    commitPointer(spark, tableDir, ver)
-    EncodeResult(ver, snapshotId, totalBlocks, numNew.toLong, tot.getLong(0),
-      tot.getLong(1), tot.getLong(2), tot.getLong(3), tot.getLong(4),
-      contentSig, complete = true)
+    writeBlocksVersion(
+      keyed.withColumn("block_id", graft_range_bucket(col("_graft_key"), bcBounds) + blockOffset),
+      tableDir, ver, numNew, stats)
+    numNew
   }
 
   /** Incremental compaction (Iceberg OPTIMIZE analogue, rewrite-only-what-
@@ -999,27 +889,11 @@ object GraftTable {
       tableDir: String,
       opts: Options = Options(),
       fillFactor: Double = 0.5): EncodeResult = {
-    val p = currentSnapshot(spark, tableDir).getOrElse(
-      throw new IllegalStateException(s"no committed snapshot at $tableDir"))
-    def noop = EncodeResult(p.version, p.snapshotId, p.numBlocks, 0L,
-      p.blocksEncoded, p.rowCount, p.tokenCount, p.bytesTotal, p.plainBytes,
-      p.contentSig, p.complete)
-    if (p.dataDirs.isEmpty) return noop
-
+    val p = committed(spark, tableDir)
+    if (p.dataDirs.isEmpty) return EncodeResult.unchanged(p)
     val man = readManifest(spark, tableDir, p)
-    val perVer = man.groupBy(col("ver").cast("int").as("ver"))
-      .agg(avg(col("row_count")).as("avg_rows"), count(lit(1)).as("blocks"))
-      .collect()
-    val frag = perVer
-      .filter(_.getDouble(1) < fillFactor * opts.targetRowsPerBlock)
-      .map(_.getInt(0)).toSet
-    val fragBlocks = perVer.filter(r => frag(r.getInt(0))).map(_.getLong(2)).sum
-    // nothing to merge: no fragment, or one fragment that is one block
-    if (frag.isEmpty || (frag.size == 1 && fragBlocks <= 1)) return noop
-
-    def verOf(dir: String): Int = versionOfDir(dir)
-    val keepData = p.dataDirs.filterNot(d => frag(verOf(d)))
-    val keepMan = p.manifestDirs.filterNot(d => frag(verOf(d)))
+    val frag = fragmentedVersions(man, fillFactor, opts.targetRowsPerBlock)
+    if (frag.isEmpty) return EncodeResult.unchanged(p)
 
     // decode ONLY the fragmented versions' blocks
     val hit = man
@@ -1037,59 +911,18 @@ object GraftTable {
     // fragments' — uniqueness matters, compactness doesn't)
     val blockOffset =
       man.agg(max(col("block_id").cast("int"))).head().getInt(0) + 1
-    val bounds = computeBounds(keyed, stats.rows, opts.targetRowsPerBlock, opts.sampleRows)
-    val bcBounds = spark.sparkContext.broadcast(bounds)
-    val numNew = bounds.length + 1
-
-    import spark.implicits._
-    val parallelism = spark.sparkContext.defaultParallelism
-    val encodeParts = encodePartitions(numNew, parallelism, stats.tokensTotal)
-    val blocks = keyed
-      .select(
-        (graft_range_bucket(col("_graft_key"), bcBounds) + blockOffset).as("block_id"),
-        col("_graft_key").as("k"), col("doc_id"),
-        graft_encode(col("tokens"), "for").as("tokens"),
-        col("n_tok"), col("source"))
-      .repartition(encodeParts, col("block_id"))
-      .sortWithinPartitions(col("block_id"), col("k"), col("doc_id"))
-      .as[BlockInput]
-      .mapPartitions(it =>
-        BlockAssembler.assemble(it, ver, stats.allowDict, stats.allowFsst))
-
-    val dataDir = s"data/v$ver"
-    blocks.write.mode("overwrite").parquet(s"$tableDir/$dataDir")
-    // persisted across the JSON write and the totals aggregate (see append)
-    val manifest = manifestOf(spark, s"$tableDir/$dataDir")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val manifestDir = s"manifests/v$ver"
-    val manifestDirs = keepMan :+ manifestDir
-    val dataDirs = keepData :+ dataDir
-    val tot = try {
-      manifest.write.mode("overwrite").json(s"$tableDir/$manifestDir")
-      manifestTotalsWithFresh(spark, tableDir, keepMan, manifest).agg(
-        count(lit(1)).as("blocks"), sum("row_count").as("rows"),
-        sum("token_count").as("tokens"), sum("bytes_total").as("bytes"),
-        sum("plain_bytes").as("plain"), expr("bit_xor(block_sig)").as("sig")).head()
-    } finally { manifest.unpersist(false); () }
-
+    val numNew = writeBatchVersion(keyed, tableDir, ver, blockOffset, stats, opts)
     val combinedFp = Hashing.sha256Hex(s"${p.inputFingerprint};compact=v$ver")
-    val contentSig = f"${tot.getLong(5)}%016x"
-    val totalBlocks = tot.getLong(0).toInt
-    val snapshotId = Hashing.sha256Hex(
-      s"v$ver;parent=${p.snapshotId};fp=$combinedFp;compacted=${frag.toSeq.sorted.mkString(",")};" +
-        s"rows=${tot.getLong(1)};tokens=${tot.getLong(2)};" +
-        s"bytes=${tot.getLong(3)};sig=$contentSig")
-    val snap = Snapshot(ver, snapshotId, Some(p.snapshotId), combinedFp,
-      KeyStrategy, p.boundsDir, totalBlocks, tot.getLong(0), complete = true,
-      tot.getLong(1), tot.getLong(2), tot.getLong(3), tot.getLong(4),
-      contentSig, dataDirs, manifestDirs,
-      (stats.asJsonFields ++ carriedMeta(Some(p)).toSeq).sorted,
-      java.time.Instant.now().toString)
-    writeString(spark, s"$tableDir/metadata/v$ver.json", renderSnapshot(snap))
-    commitPointer(spark, tableDir, ver)
-    EncodeResult(ver, snapshotId, totalBlocks, numNew.toLong, tot.getLong(0),
-      tot.getLong(1), tot.getLong(2), tot.getLong(3), tot.getLong(4),
-      contentSig, complete = true)
+    Commit.withManifest(tableDir, ver, manifestOf(spark, _)) { fresh =>
+      Commit(spark, tableDir, ver, Some(fresh), Some(p), frag, lane = "", newBlocks = numNew) { t =>
+        val snapshotId = Hashing.sha256Hex(
+          s"v$ver;parent=${p.snapshotId};fp=$combinedFp;" +
+            s"compacted=${frag.toSeq.sorted.mkString(",")};" +
+            s"rows=${t.rows};tokens=${t.tokens};bytes=${t.bytes};sig=${t.contentSig}")
+        Commit.Head(snapshotId, Some(p.snapshotId), combinedFp, KeyStrategy, p.boundsDir,
+          t.blocks.toInt, complete = true, stats.asJsonFields ++ carriedMeta(Some(p)).toSeq)
+      }
+    }
   }
 
   /** Delete data/manifest/bounds dirs not referenced by the CURRENT
@@ -1272,10 +1105,14 @@ object GraftTable {
     spark.read.json(snap.manifestDirs.map(d => s"$tableDir/$d"): _*)
 
   def readManifest(spark: SparkSession, tableDir: String): DataFrame =
-    readManifest(spark, tableDir, currentSnapshot(spark, tableDir).getOrElse(
-      throw new IllegalStateException(s"no committed snapshot at $tableDir")))
+    readManifest(spark, tableDir, committed(spark, tableDir))
 
   // ------------------------------------------------------------ metadata
+
+  /** The current snapshot; fails loud on a table with no commit yet. */
+  private[graft] def committed(spark: SparkSession, tableDir: String): Snapshot =
+    currentSnapshot(spark, tableDir).getOrElse(
+      throw new IllegalStateException(s"no committed snapshot at $tableDir"))
 
   def currentSnapshot(spark: SparkSession, tableDir: String): Option[Snapshot] =
     readStringOpt(spark, s"$tableDir/metadata/current").map { v =>
@@ -1353,17 +1190,6 @@ object GraftTable {
 
   private def hfs(spark: SparkSession, path: String) =
     new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
-
-  /** Atomic snapshot-pointer commit: write `metadata/current.tmp`, then
-    * RENAME over `metadata/current` (atomic on HDFS and POSIX local fs).
-    * A plain create-overwrite truncates in place, so a concurrent reader
-    * could observe an empty/partial pointer mid-commit; rename gives
-    * readers either the old version or the new one, never neither —
-    * the snapshot-isolation contract the rest of the metadata tree
-    * assumes (data/manifest dirs are immutable once the pointer moves).
-    */
-  private[table] def commitPointer(spark: SparkSession, tableDir: String, ver: Int): Unit =
-    writeStringAtomic(spark, s"$tableDir/metadata/current", ver.toString)
 
   /** Tmp-then-rename write: concurrent readers observe either the previous
     * content or the new one, never an empty/partial file. Used for every

@@ -3,6 +3,7 @@ package graft.table
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.Timing.timed
 import graft.codec.{Hashing, IntBlocks}
 
 /** Sampled per-column statistics that drive codec auto-selection (SURVEY.md
@@ -61,17 +62,6 @@ object Stats {
   /** `tokens` must be the input-shaped table (doc_id, tokens, n_tok, source)
     * with a `_graft_key` bigint column already attached.
     */
-  private val timing = sys.env.get("GRAFT_TIMING").contains("1")
-  private def timed[T](label: String)(f: => T): T = {
-    if (!timing) f
-    else {
-      val t0 = System.nanoTime()
-      val r = f
-      println(f"GRAFT_TIMING $label ${(System.nanoTime() - t0) / 1e9}%.2fs")
-      r
-    }
-  }
-
   def collect(keyed: DataFrame, sampleRows: Long = 1L << 20): ColumnStats = {
     // fingerprint hashes the cheap scalar fields only: hashing every token
     // would tax the hot path (~15 ns/token measured at local[8]) for a

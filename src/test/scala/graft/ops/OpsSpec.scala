@@ -152,9 +152,9 @@ class OpsSpec extends AnyFunSuite {
     val pdocs = Seq("p1", "p2", "p3", "p4", "p5").toDF("doc_id")
     // force the ITERATIVE path (a 4-edge graph would otherwise take the
     // driver union-find fast path, which has no rounds to account)
-    System.setProperty("graft.clusters.driverEdgeMax", "0")
     spark.listenerManager.register(lsn)
     try {
+      System.setProperty("graft.clusters.driverEdgeMax", "0")
       val out = Dedup.clusters(path, pdocs).collect()
       assert(out.length == 5 && out.forall(_.getString(1) == "p1"))
       // listener delivery is async — poll until counts stabilize
@@ -212,6 +212,24 @@ class OpsSpec extends AnyFunSuite {
     finally System.clearProperty("graft.clusters.driverEdgeMax")
     assert(driver.size == ds.count())
     assert(driver == distributed)
+  }
+
+  test("clusters: a malformed gate property falls back to its default") {
+    val pairs = Seq(("a", "b"), ("b", "c")).toDF("doc_a", "doc_b")
+    val ds = Seq("a", "b", "c", "d").toDF("doc_id")
+    try {
+      System.setProperty("graft.clusters.driverEdgeMax", "not-a-number")
+      System.setProperty("graft.clusters.driverCharMax", "1e9")
+      assert(Dedup.ClustersDriverEdgeMax == (1L << 20))
+      assert(Dedup.ClustersDriverCharMax == (1L << 25))
+      val out = Dedup.clusters(pairs, ds).collect()
+        .map(r => r.getString(0) -> r.getString(1)).toMap
+      assert(out == Map("a" -> "a", "b" -> "a", "c" -> "a", "d" -> "d"))
+    } finally {
+      System.clearProperty("graft.clusters.driverEdgeMax")
+      System.clearProperty("graft.clusters.driverCharMax")
+      Dedup.releaseCaches(blocking = true)
+    }
   }
 
   test("cap skips are logged + recorded; releaseCaches clears shingle caches") {
