@@ -555,7 +555,7 @@ object Dedup {
     * path entirely.
     */
   private[ops] def ClustersDriverEdgeMax: Long =
-    longProp("graft.clusters.driverEdgeMax", 1L << 20)
+    graft.Props.long("graft.clusters.driverEdgeMax", 1L << 20)
 
   /** Companion byte-ish budget for the same gate: total id CHARACTERS
     * across the directed edge list (default 2^25 ≈ 33M chars — ~64 MB as
@@ -563,18 +563,7 @@ object Dedup {
     * long-id corpora (URLs, content digests) that pass the row gate.
     */
   private[ops] def ClustersDriverCharMax: Long =
-    longProp("graft.clusters.driverCharMax", 1L << 25)
-
-  /** A long-valued system property; a malformed value logs a warning and
-    * yields `default`, so bad config never crashes the operator.
-    */
-  private[ops] def longProp(name: String, default: Long): Long =
-    sys.props.get(name).fold(default) { v =>
-      v.toLongOption.getOrElse {
-        log.warn(s"ignoring malformed $name=$v; using the default $default")
-        default
-      }
-    }
+    graft.Props.long("graft.clusters.driverCharMax", 1L << 25)
 
   /** Driver-side exact connected components for edge lists small enough
     * to collect (≤ [[ClustersDriverEdgeMax]] directed rows). Union-find

@@ -886,13 +886,6 @@ object GenericTable {
     DataType.fromJson(json).asInstanceOf[StructType]
   }
 
-  /** Decode, version by version: each version's blocks are read with the
-    * leaf plan of the schema they were written with, projected onto the
-    * requested fields of the current (merged) read schema — fields a
-    * version predates read as null, exactly like Parquet/Iceberg schema
-    * evolution. The per-version frames union by position (same projected
-    * column list).
-    */
   /** Decode only rows whose range key falls in [lo, hi]: block pruning on
     * the per-block key_min/key_max zone maps (a plain predicate on the
     * block files, so parquet row-group statistics skip whole groups), then
@@ -950,6 +943,47 @@ object GenericTable {
     }
   }
 
+  /** `dirs` (live data or manifest dirs of `snap`) by version, ascending,
+    * each with the schema its version was WRITTEN with. A live version
+    * whose metadata/vN.json is gone fails loud.
+    */
+  private[graft] def versionWriteSchemas(
+      spark: SparkSession,
+      tableDir: String,
+      snap: Snapshot,
+      dirs: Seq[String]): Seq[(Int, Seq[String], StructType)] =
+    dirs.groupBy(versionOf).toSeq.sortBy(_._1).map { case (ver, ds) =>
+      val vsnap =
+        if (ver == snap.version) snap
+        else GraftTable.snapshotVersion(spark, tableDir, ver).getOrElse(
+          throw new IllegalStateException(
+            s"v$ver is live but metadata/v$ver.json is missing"))
+      (ver, ds, writeSchemaOf(vsnap))
+    }
+
+  /** The same dirs grouped by write schema, in order of each schema's first
+    * version: one plan branch per schema EPOCH, not per version — a
+    * long-running streamed table (one version per micro-batch) must not
+    * build a thousand-branch union. Versions written under the same schema
+    * share one leaf plan, so plan size grows with schema evolutions (rare),
+    * not ingests.
+    */
+  private def schemaEpochs(
+      spark: SparkSession,
+      tableDir: String,
+      snap: Snapshot,
+      dirs: Seq[String]): Seq[(StructType, Seq[String])] =
+    versionWriteSchemas(spark, tableDir, snap, dirs).groupBy(_._3.json).toSeq
+      .sortBy(_._2.map(_._1).min)
+      .map { case (_, group) => (group.head._3, group.flatMap(_._2)) }
+
+  /** Decode, version by version: each version's blocks are read with the
+    * leaf plan of the schema they were written with, projected onto the
+    * requested fields of the current (merged) read schema — fields a
+    * version predates read as null, exactly like Parquet/Iceberg schema
+    * evolution. The per-epoch frames union by position (same projected
+    * column list).
+    */
   private def decodeFields(
       spark: SparkSession,
       tableDir: String,
@@ -963,25 +997,8 @@ object GenericTable {
     if (liveDirs.isEmpty)
       return spark.createDataFrame(
         new java.util.ArrayList[Row](), StructType(wanted))
-    // One scan branch per distinct WRITE SCHEMA, not per version: a
-    // long-running streamed table (one version per micro-batch) must not
-    // build a thousand-branch union — versions written under the same
-    // schema share one leaf plan and therefore one multi-dir parquet scan.
-    // Plan size now grows with schema EVOLUTIONS (rare), not ingests.
-    val byVersion = liveDirs.groupBy(versionOf).toSeq.sortBy(_._1).map {
-      case (ver, dirs) =>
-        val vsnap =
-          if (ver == snap.version) snap
-          else GraftTable.snapshotVersion(spark, tableDir, ver).getOrElse(
-            throw new IllegalStateException(
-              s"data dir of v$ver is live but metadata/v$ver.json is missing"))
-        (ver, dirs, writeSchemaOf(vsnap))
-    }
-    val bySchema = byVersion.groupBy(_._3.json).toSeq
-      .sortBy(_._2.map(_._1).min).map { case (_, group) => group }
-    val perGroup = bySchema.map { group =>
-      val wplan = planOf(group.head._3)
-      val dirs = group.flatMap(_._2)
+    val perGroup = schemaEpochs(spark, tableDir, snap, liveDirs).map { case (ws, dirs) =>
+      val wplan = planOf(ws)
       val leafIdx = wplan.flatMap(_._2).map(_.name).zipWithIndex.toMap
       val byName = wplan.map(p => p._1.name -> p).toMap
       val present = wanted.flatMap(f => byName.get(f.name))
@@ -1016,27 +1033,16 @@ object GenericTable {
   }
 
   /** Per-(column, codec) selection evidence, the generic `describe`.
-    * One plan branch per distinct WRITE SCHEMA (leaf indices differ per
-    * schema epoch, so manifests group by epoch, not per version — a
-    * 1000-micro-batch streamed table plans #epochs branches, exactly like
-    * decodeFields), and within a branch every leaf unpivots through ONE
-    * explode instead of a per-leaf union.
+    * One plan branch per schema epoch (leaf indices differ per epoch, so
+    * manifests group by epoch, exactly like decodeFields), and within a
+    * branch every leaf unpivots through ONE explode instead of a per-leaf
+    * union.
     */
   def describe(spark: SparkSession, tableDir: String): DataFrame = {
     val snap = GraftTable.committed(spark, tableDir)
-    val byVersion = snap.manifestDirs.groupBy(versionOf).toSeq.sortBy(_._1).map {
-      case (ver, dirs) =>
-        val vsnap =
-          if (ver == snap.version) snap
-          else GraftTable.snapshotVersion(spark, tableDir, ver).getOrElse(
-            throw new IllegalStateException(s"metadata/v$ver.json missing"))
-        (ver, dirs, writeSchemaOf(vsnap))
-    }
-    val bySchema = byVersion.groupBy(_._3.json).toSeq
-      .sortBy(_._2.map(_._1).min).map(_._2)
-    val perGroup = bySchema.map { group =>
-      val leaves = planOf(group.head._3).flatMap(_._2)
-      val dirs = group.flatMap(_._2)
+    val epochs = schemaEpochs(spark, tableDir, snap, snap.manifestDirs)
+    val perGroup = epochs.map { case (ws, dirs) =>
+      val leaves = planOf(ws).flatMap(_._2)
       val man = spark.read.json(dirs.map(d => s"$tableDir/$d"): _*)
       val entries = array(leaves.zipWithIndex.map { case (l, i) =>
         struct(lit(l.name).as("column"), col(s"codec_$i").as("codec"),

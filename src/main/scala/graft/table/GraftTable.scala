@@ -3,7 +3,7 @@ package graft.table
 import java.nio.charset.StandardCharsets
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
 import org.json4s._
@@ -392,8 +392,8 @@ object GraftTable {
     // job; the fast path still replaces the 3-4 jobs of the distributed
     // rank machinery with 2)
     val expectedSample = rows / stride
-    if (expectedSample <= SmallBoundsSampleMax &&
-        s.count() <= SmallBoundsSampleMax) {
+    val sampleMax = SmallBoundsSampleMax
+    if (expectedSample <= sampleMax && s.count() <= sampleMax) {
       val ks = s.collect().map(_.getLong(0)).sorted
       val cnt = ks.length.toLong
       if (cnt < numBlocks) return Array.empty
@@ -430,7 +430,7 @@ object GraftTable {
     * tests via the graft.bounds.smallSampleMax system property.
     */
   private[table] def SmallBoundsSampleMax: Long =
-    sys.props.get("graft.bounds.smallSampleMax").map(_.toLong).getOrElse(1L << 20)
+    graft.Props.long("graft.bounds.smallSampleMax", 1L << 20)
 
   /** Spill-aware partition count for the encode exchange. Three regimes:
     *   - small tables: one partition per block is enough (never exceed
@@ -698,11 +698,6 @@ object GraftTable {
     } else spark.read.parquet(snap.dataDirs.map(d => s"$tableDir/$d"): _*)
   }
 
-  /** Snapshot as of an older `version` (time travel). Every committed
-    * version keeps its metadata/vN.json, so any version is addressable
-    * until [[expireSnapshots]] reclaims its files — after which this
-    * fails loud rather than returning a partial table.
-    */
   /** Version number of a `data/vN` / `manifests/vN` relative dir. */
   private[graft] def versionOfDir(dir: String): Int =
     dir.substring(dir.lastIndexOf("/v") + 2).toInt
@@ -712,6 +707,11 @@ object GraftTable {
       spark: SparkSession, tableDir: String, version: Int): Option[Snapshot] =
     readStringOpt(spark, s"$tableDir/metadata/v$version.json").map(parseSnapshot)
 
+  /** Snapshot as of an older `version` (time travel). Every committed
+    * version keeps its metadata/vN.json, so any version is addressable
+    * until [[expireSnapshots]] reclaims its files — after which this
+    * fails loud rather than returning a partial table.
+    */
   def snapshotAt(spark: SparkSession, tableDir: String, version: Int): Snapshot = {
     val s = snapshotVersion(spark, tableDir, version)
       .getOrElse(throw new IllegalArgumentException(
@@ -738,9 +738,13 @@ object GraftTable {
   }
 
   private def decodeSnap(
-      spark: SparkSession, snap: Snapshot, tableDir: String): Dataset[TokenRow] = {
-    import spark.implicits._
-    readBlocks(spark, tableDir, snap)
+      spark: SparkSession, snap: Snapshot, tableDir: String): Dataset[TokenRow] =
+    tokenRows(readBlocks(spark, tableDir, snap))
+
+  /** Block rows → decoded token rows, one output row per document. */
+  private def tokenRows(blocks: DataFrame): Dataset[TokenRow] = {
+    import blocks.sparkSession.implicits._
+    blocks
       .select(explode(arrays_zip(
         graft_decode_str(col("pl_doc_id")).as("doc_id"),
         graft_reslice(graft_decode(col("pl_tokens")), graft_decode(col("pl_n_tok")))
@@ -1039,14 +1043,9 @@ object GraftTable {
       spark: SparkSession, tableDir: String, minId: Long, maxId: Long): Dataset[TokenRow] = {
     // live blocks whose [doc_id_min, doc_id_max] intersects [minId, maxId]
     // — works for both ranged encodes and appended versions; the id set is
-    // applied as a semi join so it never collects to the driver. A block
-    // whose min/max doc_id is NON-numeric casts to NULL — such blocks can
-    // still contain in-range numeric ids (hash-key fallback interleaves
-    // them), so NULL bounds are NON-prunable (coalesce → keep) and the
-    // exact row filter below decides.
+    // applied as a semi join so it never collects to the driver
     val hit = readManifest(spark, tableDir)
-      .where(coalesce(expr("try_cast(doc_id_max as bigint)") >= minId, lit(true)) &&
-        coalesce(expr("try_cast(doc_id_min as bigint)") <= maxId, lit(true)))
+      .where(docIdSpanHits(minId, maxId))
       .select(col("ver").cast("int").as("ver"),
         col("block_id").cast("int").as("block_id"))
     decodeBlocks(spark, tableDir, hit)
@@ -1065,9 +1064,8 @@ object GraftTable {
   def decodeWhere(
       spark: SparkSession, tableDir: String, sources: Seq[String]): Dataset[TokenRow] = {
     require(sources.nonEmpty, "decodeWhere needs at least one source value")
-    val wanted = array(sources.map(lit): _*)
     val hit = readManifest(spark, tableDir)
-      .where(col("src_list").isNull || arrays_overlap(col("src_list"), wanted))
+      .where(srcListHits(sources))
       .select(col("ver").cast("int").as("ver"),
         col("block_id").cast("int").as("block_id"))
     decodeBlocks(spark, tableDir, hit)
@@ -1077,29 +1075,31 @@ object GraftTable {
   /** Block ids [[decodeWhere]] would read — PlanSpec asserts pruning. */
   private[table] def blocksForSources(
       spark: SparkSession, tableDir: String, sources: Seq[String]): Long =
-    readManifest(spark, tableDir)
-      .where(col("src_list").isNull ||
-        arrays_overlap(col("src_list"), array(sources.map(lit): _*)))
-      .count()
+    readManifest(spark, tableDir).where(srcListHits(sources)).count()
 
   private def decodeBlocks(
       spark: SparkSession, tableDir: String,
-      liveBlocks: DataFrame): Dataset[TokenRow] = {
-    import spark.implicits._
-    readBlocks(spark, tableDir)
-      .join(broadcast(liveBlocks), Seq("ver", "block_id"), "left_semi")
-      .select(explode(arrays_zip(
-        graft_decode_str(col("pl_doc_id")).as("doc_id"),
-        graft_reslice(graft_decode(col("pl_tokens")), graft_decode(col("pl_n_tok")))
-          .as("tokens"),
-        graft_decode_str(col("pl_source")).as("source"))).as("r"))
-      .select(
-        col("r.doc_id").as("doc_id"),
-        col("r.tokens").as("tokens"),
-        size(col("r.tokens")).as("n_tok"),
-        col("r.source").as("source"))
-      .as[TokenRow]
-  }
+      liveBlocks: DataFrame): Dataset[TokenRow] =
+    tokenRows(readBlocks(spark, tableDir)
+      .join(broadcast(liveBlocks), Seq("ver", "block_id"), "left_semi"))
+
+  /** Zone-map predicate over manifest rows: the block's [doc_id_min,
+    * doc_id_max] can hold a numeric doc_id in [lo, hi]. A NON-numeric bound
+    * reads as NULL (try_cast, never an ANSI cast error) and keeps its side
+    * of the test: hash-keyed ids interleave with numeric ones, so such a
+    * block can still hold in-range numeric ids, and the exact row filter
+    * decides.
+    */
+  private[graft] def docIdSpanHits(lo: Long, hi: Long): Column =
+    coalesce(expr("try_cast(doc_id_max as bigint)") >= lo, lit(true)) &&
+      coalesce(expr("try_cast(doc_id_min as bigint)") <= hi, lit(true))
+
+  /** Zone-map predicate over manifest rows: the block's distinct-source
+    * list holds one of `sources`. A list that overflowed the cap is null
+    * and keeps the block (never wrongly pruned).
+    */
+  private[graft] def srcListHits(sources: Seq[String]): Column =
+    col("src_list").isNull || arrays_overlap(col("src_list"), array(sources.map(lit): _*))
 
   def readManifest(spark: SparkSession, tableDir: String, snap: Snapshot): DataFrame =
     spark.read.json(snap.manifestDirs.map(d => s"$tableDir/$d"): _*)

@@ -106,6 +106,16 @@ class DataSourceSpec extends AnyFunSuite {
     assert(pruned >= 1 && pruned < 4, s"expected tight pruning, got: $desc")
     val rows = df.collect()
     assert(rows.length == 1 && rows.head.getString(0) == "123")
+    // non-numeric doc ids: a zone-map bound that is not a number keeps its
+    // block (Spark's ANSI cast would throw on it) and the residual answers
+    val mixed = Files.createTempDirectory("graft-dsv2-ids").toString
+    GraftTable.encode(
+      Seq(("a1", Seq(1, 2), 2, "s1"), ("b2", Seq(3), 1, "s2"), ("42", Seq(4, 5, 6), 3, "s1"))
+        .toDF("doc_id", "tokens", "n_tok", "source"), mixed)
+    val ids = spark.read.format("graft").load(mixed)
+    assert(ids.where(col("doc_id") === "42").count() == 1)
+    assert(ids.where(col("doc_id").isin("42", "7")).count() == 1)
+    assert(ids.where(col("doc_id") === "a1").count() == 1)
   }
 
   test("source IN (...) prunes via src_list and count(*) survives empty prune") {
@@ -321,14 +331,14 @@ class DataSourceSpec extends AnyFunSuite {
       rows, dir, keyCol = "id", opts = GraftTable.Options(targetRowsPerBlock = 64))
     val df = spark.read.format("graft").load(dir)
       .where(col("id") >= 100L && col("id") <= 120L)
-    val scan = scanOf(df).scan.asInstanceOf[GraftGenericScan]
+    val scan = scanOf(df).scan.asInstanceOf[GraftScan]
     assert(scan.description().contains("range=[100,120]"), scan.description())
     val got = df.select("id").collect().map(_.getLong(0)).sorted
     val want: Array[Long] = (100L to 120L).toArray
     assert(got.sameElements(want))
     // equality composes into a one-point interval, stays exact
     val one = spark.read.format("graft").load(dir).where(col("id") === 777L)
-    assert(scanOf(one).scan.asInstanceOf[GraftGenericScan]
+    assert(scanOf(one).scan.asInstanceOf[GraftScan]
       .description().contains("range=[777,777]"))
     assert(one.collect().map(r => (r.getLong(0), r.getString(1))).toSeq ==
       Seq((777L, "s777")))

@@ -100,6 +100,16 @@ class BoundsSpec extends AnyFunSuite {
     } finally System.clearProperty("graft.bounds.smallSampleMax")
   }
 
+  test("computeBounds: a malformed smallSampleMax falls back to the default gate") {
+    val keyed = (0 until 3000).map(i => (i * 2654435761L) % 100003L).toDF("_graft_key")
+    val default = GraftTable.computeBounds(keyed, 3000, 64, 1L << 20)
+    System.setProperty("graft.bounds.smallSampleMax", "not-a-number")
+    try {
+      assert(GraftTable.SmallBoundsSampleMax == (1L << 20))
+      assert(GraftTable.computeBounds(keyed, 3000, 64, 1L << 20).sameElements(default))
+    } finally System.clearProperty("graft.bounds.smallSampleMax")
+  }
+
   test("Ranks.withRank handles empty input") {
     val (_, total, release) = Ranks.withRank(
       Seq.empty[Long].toDF("k"), col("k"), "rn", 4)
